@@ -7,14 +7,14 @@ al., "Connected Components in MapReduce and Beyond", SoCC 2014).
 Key deviations from the reference — all CC-result-preserving, chosen
 for 100 TB scale (SURVEY.md §4.3, §7.3):
 
-* **Join-based stars.** The reference groups neighbors into a
+* **Windowed stars.** The reference groups neighbors into a
   ``mutable.HashSet`` per node (ConnectedComponent.scala:65-69,
   139-141), which puts per-node adjacency arrays on the shuffle and
   inherits the degree-skew memory hazard its own comments warn about
-  (ConnectedComponent.scala:62-63,135-136).  We instead compute the
-  neighborhood minimum as a scalar ``min()`` aggregation and join it
-  back — pure joins/aggregations, whole-stage-codegen'd, map-side
-  partial aggregation for free, and AQE splits skewed reducers.
+  (ConnectedComponent.scala:62-63,135-136).  We instead shuffle plain
+  rows by node once per star and read the neighborhood minimum off a
+  sorted window — no adjacency array, no join, and a hub's group
+  spills to disk instead of living in one set.
 * **Per-round checkpointing.** The reference never checkpoints and
   its lineage grows ~6 stages per round (SURVEY.md §4.4).  We
   ``localCheckpoint`` (or reliable ``checkpoint``) each round.
@@ -38,7 +38,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Literal
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -112,41 +112,54 @@ def _canonical_edges(edges: DataFrame) -> DataFrame:
     ).where(F.col("src").isNotNull() & F.col("dst").isNotNull())
 
 
+def _star(directed: DataFrame, keep: Column) -> DataFrame:
+    """Shared body of both stars: one exchange, one sort, one window.
+
+    Sorted by ``dst`` within a ``src`` group, the running ``min(dst)``
+    on every row is the group min, so ``m = least(src, min)`` needs no
+    aggregation joined back; the ``row_number() = 1`` row emits the
+    ``(src, m)`` self pair.  One ``inline`` emits both candidate rows,
+    ``(dst, m)`` where ``keep`` (over src/dst/m) holds and the self
+    pair, so the window has one consumer and its shuffle cannot split.
+    """
+    w = Window.partitionBy("src").orderBy("dst")
+    ranked = directed.select(
+        "src",
+        "dst",
+        F.least("src", F.min("dst").over(w)).alias("m"),
+        (F.row_number().over(w) == 1).alias("first"),
+    )
+
+    def pair(cond: Column, node: str) -> Column:
+        src = F.when(cond, F.col(node)).alias("src")
+        return F.struct(src, F.col("m").alias("dst"))
+
+    emit = F.inline(F.array(pair(keep, "dst"), pair(F.col("first"), "src")))
+    return ranked.select(emit).where(F.col("src").isNotNull())
+
+
 def large_star(edges: DataFrame, salts: int | None = None) -> DataFrame:
     """One Large-Star round (reference ConnectedComponent.scala:114-176).
 
     For each node ``v`` with neighborhood ``N`` (edges viewed in both
     directions, self-loops emitted once, :122-128): let
     ``m = min(v ∪ N)``; emit ``(n, m)`` for every ``n ∈ v ∪ N`` with
-    ``n >= v`` (:147-159), deduplicated.
+    ``n >= v`` (:147-159).  No global distinct here: the reference
+    also dedups only within a group (:159 ``toSet`` is per-node), and
+    small_star closes the round with one global distinct.
 
-    Join formulation: ``m`` is a scalar ``min`` aggregation joined
-    back onto the directed edges; the ``n >= v`` predicate becomes a
-    ``WHERE`` on the directed edge before the join, and the ``n = v``
-    member of the emit set is exactly one row per group — the min-map
-    itself.
+    ``salts=None`` (default) is the windowed layout of :func:`_star`,
+    one shuffle on src — but it ships every raw row of a key to one
+    reducer (the window buffers the group, spilling past its row
+    thresholds), so on a CONVERGED-HUB graph the giant component's
+    whole degree lands on the hub's task, and AQE cannot split it.
 
-    ``salts=None`` (default) is the FUSED single-shuffle layout: one
-    explicit repartition on src feeds both the aggregation and the
-    join (2 shuffles -> 1 per star, measured -22% wall on a 1.9M-node
-    graph) — but it ships every raw row of a key to one reducer, and
-    on a CONVERGED-HUB graph the giant component's whole degree lands
-    on the hub's task.  AQE cannot help there: skew-join splitting
-    requires the join to own bare shuffle stages on both sides (the
-    shared exchange and the aggregation above the min side both break
-    the rule's pattern, and splitting a groupBy partition is never
-    legal) — measured, not assumed (r12; the executed SMJ plan on an
-    800k-star carries no skew=true marker under forced-low
-    thresholds).
-
-    ``salts=N`` is the SKEW-SAFE layout for such graphs: the min
-    aggregation keeps its own exchange (partial_min map-side combine
-    bounds the hub key's reducer input at #map-partitions), and the
-    min-map join becomes operators/skew.py:salted_join — the hub's
-    rows spread over N reducers keyed (src, salt), the mins side
-    replicated N×.  Row-identical output; costs one extra (combined)
-    shuffle per round plus the N× mins replication, so it is opt-in
-    for skewed topologies rather than the default.
+    ``salts=N`` is the SKEW-SAFE layout for such graphs: ``m`` is a
+    scalar ``min`` aggregation (partial_min map-side combine bounds
+    the hub key's reducer input at #map-partitions) joined back via
+    operators/skew.py:salted_join — the hub's rows spread over N
+    reducers keyed (src, salt), the mins side replicated N×.  Same
+    pair set, at the cost of extra shuffles and the replication.
     """
     und = edges.where(F.col("src") != F.col("dst"))
     directed = (
@@ -154,28 +167,19 @@ def large_star(edges: DataFrame, salts: int | None = None) -> DataFrame:
         .union(edges.where(F.col("src") == F.col("dst")))
     )
     if salts is None:
-        directed = directed.repartition("src")
+        return _star(directed, F.col("dst") >= F.col("src"))
+    from connected_component_spark.operators.skew import salted_join
+
     mins = (
         directed.groupBy("src")
         .agg(F.min("dst").alias("_mn"))
         .select("src", F.least("src", "_mn").alias("m"))
     )
     emit = directed.where(F.col("dst") >= F.col("src"))
-    if salts is None:
-        joined = emit.join(mins, "src")
-    else:
-        from connected_component_spark.operators.skew import salted_join
-
-        joined = salted_join(emit, mins, "src", salts=salts)
-    from_neighbors = joined.select(
+    from_neighbors = salted_join(emit, mins, "src", salts=salts).select(
         F.col("dst").alias("src"), F.col("m").alias("dst")
     )
-    from_self = mins.select(F.col("src"), F.col("m").alias("dst"))
-    # no global distinct here: the reference also dedups only within
-    # a group (ConnectedComponent.scala:159 toSet is per-node) and
-    # lets the next aggregation absorb cross-group duplicates
-    # map-side; small_star closes the round with one global distinct
-    return from_neighbors.union(from_self)
+    return from_neighbors.union(mins.select("src", F.col("m").alias("dst")))
 
 
 def small_star(edges: DataFrame) -> DataFrame:
@@ -186,25 +190,14 @@ def small_star(edges: DataFrame) -> DataFrame:
     ``(n <= v ∧ n != m) ∨ n = v`` (:75-86), deduplicated.  After
     orientation every grouped neighbor satisfies ``n <= v``, so the
     predicate reduces to ``n != m`` on neighbors plus the ``(v, m)``
-    self row — again exactly the min-map.
+    self pair — the windowed layout of :func:`_star`, then the
+    round's one global distinct.
     """
-    # same single-shuffle layout as large_star
     oriented = edges.select(
         F.greatest("src", "dst").alias("src"),
         F.least("src", "dst").alias("dst"),
-    ).repartition("src")
-    mins = (
-        oriented.groupBy("src")
-        .agg(F.min("dst").alias("_mn"))
-        .select("src", F.least("src", "_mn").alias("m"))
     )
-    from_neighbors = (
-        oriented.join(mins, "src")
-        .where(F.col("dst") != F.col("m"))
-        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-    )
-    from_self = mins.select(F.col("src"), F.col("m").alias("dst"))
-    return from_neighbors.union(from_self).distinct()
+    return _star(oriented, F.col("dst") != F.col("m")).distinct()
 
 
 def _shuffle_write_bytes_total(spark) -> int | None:
@@ -451,8 +444,11 @@ _PROBE_SAMPLE_MOD = 8
 _PROBE_SPREAD = 1024
 
 #: probe cadence (r15): when a probed round's hot key reads below
-#: MIN_HOT // COOL_DIV, the NEXT round's probe is skipped (never two
-#: skips in a row).  The probed fingerprint costs ~3x the plain one
+#: MIN_HOT // COOL_DIV (156), the NEXT round's probe is skipped (never
+#: two skips in a row).  The reading is the 1/_PROBE_SAMPLE_MOD hash
+#: sample rescaled ×8, so near 156 it rests on ~20 sampled rows and
+#: carries ~20-25% binomial noise: the threshold is approximate.  The
+#: probed fingerprint costs ~3x the plain one
 #: (keyed (p, k) hash-agg vs an unkeyed two-scalar aggregation —
 #: measured 0.62 s vs 0.21 s per round on a 320k-pair chain graph,
 #: ~17% of cc_generated_chains' whole wall), so never-flipping runs
@@ -507,7 +503,7 @@ def connected_components(
     one reducer; ``None`` forces the fused layout for the whole run.
     Results are identical; applies to the default stable-set
     convergence (the reference-counts mode is a literal parity twin
-    and stays on the fused layout).
+    with its own groupBy + join stars).
 
     ``star_salts="auto"`` — the DEFAULT since r14 (verdict r13 #6) —
     closes the loop the static
@@ -539,9 +535,10 @@ def connected_components(
     # Stats barrier for the iterated self-join (r13; see
     # graph/scc.py:_stats_safe_leaf for the measured pathology): a
     # checkpoint leaf INHERITS the checkpointed plan's size estimate,
-    # and each star round multiplies leaf stats into the next capture
-    # (the min-map join references the round's pair set twice), so the
-    # estimate's bit-length compounds per round and deep runs
+    # and a SALTED round multiplies leaf stats into the next capture
+    # (its min-map join references the round's pair set twice; a
+    # windowed round only sums its union's reads, ~2-3 bits per
+    # round), so the bit-length compounds per round and deep runs
     # (10+ rounds — long-chain graphs) eventually burn planning CPU in
     # BigInteger arithmetic.  Persisting each round's leaf routes
     # downstream stats through InMemoryRelation's REAL byte size; the

@@ -666,7 +666,9 @@ def cc_round_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Unlike the kernel telemetry (approximate percentiles, engine-
     internal), this report runs the SAME round operators the kernel
-    loop calls (graph/cc.py:large_star/small_star) for a FIXED
+    loop calls (graph/cc.py:large_star/small_star, the windowed
+    stars; the oracle replays them as groupBy + join, see
+    :func:`_skew_round_sql`) for a FIXED
     ``_SKEW_ROUNDS`` unroll and picks EXACT discrete percentiles by
     integer rank (rank ceil(q·n) over the degree histogram — integer
     arithmetic only, no float thresholds), so a DuckDB oracle can
@@ -752,10 +754,11 @@ def cc_round_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _skew_round_sql(r: int) -> str:
-    """One alternating-star round as CTEs: the literal SQL replay of
-    graph/cc.py:large_star (both directions, self-loops once, n >= v
-    emit) then small_star ((larger, smaller) orientation, n != m emit,
-    closing distinct)."""
+    """One alternating-star round as CTEs: graph/cc.py:large_star
+    (both directions, self-loops once, n >= v emit) then small_star
+    ((larger, smaller) orientation, n != m emit, closing distinct),
+    written as min-aggregation + join rather than the kernel's window
+    — an independent formulation of the same pair set."""
     p = f"c{r - 1}"
     # every chain CTE is MATERIALIZED: DuckDB inlines plain CTEs per
     # reference, and the multi-reference unroll (c{r-1} appears 3× per

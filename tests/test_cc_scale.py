@@ -184,10 +184,12 @@ def test_cc_handles_megahub_star_graph(spark):
     """Degree-skew stress: a single hub adjacent to 2M spokes — the
     exact hazard the reference's comments warn about
     (ConnectedComponent.scala:62-63,135-136) and the reason its
-    aggregateByKey adjacency sets OOM on hubs.  The join-based kernel
-    keeps the hub's group as a scalar min aggregation (no adjacency
-    array anywhere), so the star must converge in the minimum round
-    count with every spoke assigned to the hub's component."""
+    aggregateByKey adjacency sets OOM on hubs.  The windowed kernel
+    builds no adjacency array: the hub's 2M-row group sits in the
+    window's row buffer, which spills to disk past its thresholds
+    (exercised directly by the spill-path test below), so the star
+    must converge in the minimum round count with every spoke
+    assigned to the hub's component."""
     from pyspark.sql import functions as F
 
     n = 2_000_000
@@ -203,6 +205,31 @@ def test_cc_handles_megahub_star_graph(spark):
         F.max("component").alias("m"),
     ).first()
     assert (stats["n"], stats["c"], stats["m"]) == (n + 1, 1, 0)
+
+
+def test_windowed_stars_spill_path_matches_truth(spark):
+    """The windowed stars buffer each whole src group (the hub's
+    group is ~3200 rows here).  With the window buffer forced to
+    spill past 32 rows, every round runs the spill path, and the
+    rosters must still equal the closed-form truth."""
+    from connected_component_spark.graph.generator import skewed_hub_graph
+
+    edges, truth = skewed_hub_graph(spark, 4000)
+    confs = {
+        "spark.sql.windowExec.buffer.in.memory.threshold": "16",
+        "spark.sql.windowExec.buffer.spill.threshold": "32",
+    }
+    prev = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        res = connected_components(edges, star_salts=None)
+        got = {(r.node, r.component) for r in res.assignments.collect()}
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    assert res.converged and res.salted_from_round is None
+    assert got == {(r.node, r.component) for r in truth.collect()}
 
 
 def test_graphframes_differential_if_available(spark, tmp_path):

@@ -196,6 +196,25 @@ def test_cc_round_is_pure_relational(spark):
     assert s.cartesian_products == 0
 
 
+def test_cc_round_is_one_shuffle_per_star(spark):
+    """Each star works on one node's neighbourhood, so each needs one
+    shuffle by node: a fused round is large-star's exchange,
+    small-star's exchange and the closing distinct's — 3 Exchanges,
+    no join.  Guards against the optimizer splitting a star's shuffle
+    again (the groupBy + self-join layout planned 13 Exchanges and 4
+    sort-merge joins per round).  The salted large-star keeps its
+    aggregation + salted join, so its round is allowed up to 6."""
+    from connected_component_spark.graph.cc import large_star, small_star
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (4, 5), (5, 5)], "src long, dst long"
+    )
+    fused = summarize_plan(small_star(large_star(edges)))
+    assert (fused.exchanges, fused.joins) == (3, 0)
+    salted = summarize_plan(small_star(large_star(edges, salts=8)))
+    assert salted.exchanges <= 6
+
+
 def test_chunk_documents_is_exchange_free(spark, sf_dir):
     """Chunking is a pure map-side 1->N expansion: zero Exchanges and
     zero Python evals — chunking a 100 TB corpus must be one scan."""

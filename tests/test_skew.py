@@ -112,9 +112,8 @@ def test_salted_collect_set_matches_plain(spark):
 
 def test_salted_large_star_matches_fused_and_spreads_hub(spark):
     """verdict r11 #6: AQE cannot split the fused star layout's hot
-    reducer (shared exchange + agg above the min side both break the
-    skew-join rule's pattern), so the kernel offers a salted large-star
-    (star_salts=N).  It must (a) produce identical components on the
+    reducer (a window partition is never split), so the kernel offers
+    a salted large-star (star_salts=N).  It must (a) produce identical components on the
     converged-hub topology and (b) measurably spread the hub key's
     reducer input: max rows per (key, salt) join-key group a factor
     ~salts below the unsalted max rows per key."""
@@ -137,7 +136,7 @@ def test_salted_large_star_matches_fused_and_spreads_hub(spark):
     assert a == b == t
 
     # spread evidence on a CONVERGED star (the worst round): the fused
-    # layout's join groups 3200 hub rows under one key; the salted
+    # layout's window groups 3200 hub rows under one key; the salted
     # join's (key, salt) groups cap at ~1/salts of that
     conv = truth.where(F.col("component") == 0).select(
         F.col("node").alias("src"), F.col("component").alias("dst")
