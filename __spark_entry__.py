@@ -69,33 +69,25 @@ def entry(spark: SparkSession) -> DataFrame:
 #: queries whose code path changed this round — re-verify first.
 #: Maintained per round alongside the change itself.
 _CHANGED_THIS_ROUND = (
-    # r15: the auto-salt probe CADENCE (skip one probe after a
-    # stone-cold reading, graph/cc.py) changes the per-round action of
-    # every declared row that runs the CC kernel:
-    "cc_generated_chains",
-    "cc_user_copresence",
-    "cc_copresence_rosters",
-    # ...including every row whose clustering step runs the kernel
-    #   through components_with_isolates:
-    "dedup_minhash_clusters",
-    "dedup_ngram_clusters",
-    "dedup_embedding_clusters",
-    "dedup_winnow_clusters",
-    "ann_similarity_clusters",
-    "pipeline_semantic_dedup",
-    "pipeline_dedup_retention",
-    "pipeline_leakage_safe_split",
-    "pipeline_corpus_curation",
-    "pipeline_hard_negatives",
-    # — r15 optimization: the capped-band valve's bucket sizes moved
-    #   from groupBy+join-back to a window count over the checkpointed
-    #   band table (operators/dedup.py:banded_pairs):
-    "dedup_capped_band_pairs",
-    # — r15 optimization: the recall report's shared corpus-side
-    #   frames (IVF storage assignment, PQ code table) are computed
-    #   once behind lazy checkpoints (queries/llmops.py,
-    #   operators/similarity.py, operators/quantize.py):
-    "ann_recall_report",
+    # every durable state fold now calls ``state.update`` directly
+    # (the package's fold-timing hook is gone; bench.py times folds
+    # from outside) — the rows that fold a state themselves:
+    "stream_winnow_restart",
+    "ann_ivf_incremental_topk",
+    "ann_ivf_restart_topk",
+    "text_bm25_incremental_topk",
+    "text_bm25_maxscore_topk",
+    "text_bm25_restart_topk",
+    # ...and the users of the shared foreachBatch runner
+    #   (streaming/store.py:run_state_stream):
+    "stream_incremental_cc",
+    "stream_winnow_dedup",
+    "stream_ann_ingest",
+    "stream_bm25_ingest",
+    # — the streaming-dedup row, whose fold also reaches the capped-band
+    #   valve's window count (operators/dedup.py:banded_pairs, called
+    #   from streaming/dedup.py:IncrementalDedup.update):
+    "stream_incremental_dedup",
 )
 
 #: interleave ratio for the changed/stable merge: this many changed

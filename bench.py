@@ -16,10 +16,87 @@ import json
 import os
 import sys
 import time
+from contextlib import contextmanager
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from connected_component_spark.session import get_spark  # noqa: E402
+
+
+def _fold_classes() -> tuple[type, ...]:
+    """The durable incremental operators: one ``update`` call folds
+    one batch into the state."""
+    from connected_component_spark.streaming.annindex import IncrementalIVF
+    from connected_component_spark.streaming.bm25 import IncrementalBM25
+    from connected_component_spark.streaming.dedup import IncrementalDedup
+    from connected_component_spark.streaming.incremental import IncrementalCC
+    from connected_component_spark.streaming.winnow import IncrementalWinnow
+
+    return (
+        IncrementalCC,
+        IncrementalDedup,
+        IncrementalWinnow,
+        IncrementalIVF,
+        IncrementalBM25,
+    )
+
+
+@contextmanager
+def timed_folds(classes, record: list):
+    """Per-fold wall time, measured from outside the package: swap each
+    class's ``update`` for a wrapper that appends ``{op, epoch, sec}``
+    to ``record`` after every fold that returns, and restore the
+    originals on exit.  A fold made while another timed fold runs (one
+    ``update`` calling another) is part of the outer fold's time and
+    is not recorded again."""
+    depth = 0
+
+    def wrap(orig):
+        def update(self, batch, epoch_id=None, epoch_lineage=None):
+            nonlocal depth
+            depth += 1
+            t0 = time.perf_counter()
+            try:
+                out = orig(
+                    self, batch, epoch_id=epoch_id, epoch_lineage=epoch_lineage
+                )
+            finally:
+                depth -= 1
+            if depth == 0:
+                record.append(
+                    {
+                        "op": type(self).__name__,
+                        "epoch": epoch_id,
+                        "sec": round(time.perf_counter() - t0, 3),
+                    }
+                )
+            return out
+
+        return update
+
+    originals = [(cls, cls.__dict__["update"]) for cls in classes]
+    try:
+        for cls, orig in originals:
+            cls.update = wrap(orig)
+        yield
+    finally:
+        for cls, orig in originals:
+            cls.update = orig
+
+
+def _move_aside(path: str) -> None:
+    """Rename an existing ``path`` (``BENCH_LOCAL_rNN.json``) to the
+    first free ``BENCH_LOCAL_rNN_prev{k}.json`` so a rewrite never
+    destroys a record.  The new name matches neither the
+    ``BENCH_rNN.json`` nor the ``BENCH_LOCAL_rNN.json`` pattern, so
+    round inference never reads it."""
+    if not os.path.exists(path):
+        return
+    stem = path[: -len(".json")]
+    k = 1
+    while os.path.exists(f"{stem}_prev{k}.json"):
+        k += 1
+    os.rename(path, f"{stem}_prev{k}.json")
 
 
 def _select_local_target(
@@ -28,7 +105,9 @@ def _select_local_target(
     """Pick the round number and per-query artifact path.
 
     Round: ``env_round`` when it is a valid int (an env-pinned round
-    may refresh its own artifact), else max(existing BENCH_r*) + 1.
+    writes its own artifact name; an existing file of that name is
+    first moved aside, see :func:`_move_aside`), else
+    max(existing BENCH_r*) + 1.
     The inferred path NEVER overwrites an existing record (a
     mis-inferred round must not clobber a real one — ADVICE r4 /
     VERDICT r5 #2), but a collision must not LOSE the per-query map
@@ -42,7 +121,12 @@ def _select_local_target(
 
     if env_round and env_round.isdigit():
         n = int(env_round)
-        return n, os.path.join(here, f"BENCH_LOCAL_r{n:02d}.json")
+        target = os.path.join(here, f"BENCH_LOCAL_r{n:02d}.json")
+        try:
+            _move_aside(target)
+        except OSError:
+            return n, None  # cannot keep the old record: do not write
+        return n, target
     rounds = [
         int(m.group(1))
         for f in os.listdir(here)
@@ -183,17 +267,14 @@ def main() -> None:
     # (verdict r11 #8): draw 1 records each state fold's wall time so a
     # durability-cost regression is attributable to a specific
     # trigger/operator instead of hunted by hand.  Enabled only for
-    # draw 1 — the attribution sweep — and cleared per query.
-    import connected_component_spark.streaming.store as _store_mod
-
+    # draw 1 — the attribution sweep — through timed_folds, which
+    # times each update from outside the package; cleared per query.
     fold_timings: dict[str, list] = {}
 
-    def one_draw(record_folds: bool = False) -> tuple[dict, dict]:
+    def one_draw(folds: list | None = None) -> tuple[dict, dict]:
         draw: dict[str, float] = {}
         errs: dict[str, str] = {}
         for name in sorted(qs):
-            if record_folds:
-                _store_mod.FOLD_TELEMETRY = []
             t0 = time.perf_counter()
             try:
                 qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -201,15 +282,16 @@ def main() -> None:
             except Exception as ex:  # one broken query must not void the bench
                 draw[name] = round(time.perf_counter() - t0, 3)
                 errs[name] = f"{type(ex).__name__}: {ex}"[:200]
-            if record_folds:
-                if _store_mod.FOLD_TELEMETRY:
-                    fold_timings[name] = _store_mod.FOLD_TELEMETRY
-                _store_mod.FOLD_TELEMETRY = None
+            if folds:
+                fold_timings[name] = list(folds)
+                folds.clear()
         return draw, errs
 
     # Draw 1 is THE driver-comparable number (same protocol as every
     # earlier round: one warmed sequential sweep).
-    timings, errors = one_draw(record_folds=True)
+    draw1_folds: list[dict] = []
+    with timed_folds(_fold_classes(), draw1_folds):
+        timings, errors = one_draw(draw1_folds)
     total = round(sum(timings.values()), 3)
     out = {
         "metric": "total_query_wall_clock",
@@ -227,11 +309,10 @@ def main() -> None:
     if errors:
         out["errors"] = errors
 
-    # CC-kernel telemetry on a generated graph: iteration count and
-    # per-round shuffle-write bytes — the scalability metrics the
-    # reference itself publishes/tunes (README.md:72), reported per
-    # round so regressions in shuffle volume are visible, not just
-    # wall-clock.
+    # CC-kernel point on a generated graph: iteration count and
+    # per-round pair counts — the scalability metrics the reference
+    # itself publishes (README.md:72).  Per-call shuffle bytes and
+    # reducer skew come from perfbench/run.py --trace 1.
     def cc_kernel_point(n_cliques: int) -> dict:
         try:
             from connected_component_spark.graph.cc import (
@@ -246,21 +327,13 @@ def main() -> None:
 
             t0 = time.perf_counter()
             cliques, _ = distributed_clique_chains(spark, n_cliques)
-            res = connected_components(
-                cliques_to_edges(cliques),
-                skew_telemetry=True,
-                shuffle_telemetry=True,
-            )
+            res = connected_components(cliques_to_edges(cliques))
             return {
                 "cliques": n_cliques,
                 "wall_sec": round(time.perf_counter() - t0, 3),
                 "iterations": res.iterations,
                 "converged": res.converged,
                 "round_pair_counts": res.round_pair_counts,
-                "round_shuffle_bytes": res.round_shuffle_bytes,
-                # per-round reducer-key skew (max/p50/p99 rows per src
-                # key): the straggler signal a 100 TB run tunes against
-                "round_key_skew": res.round_key_skew,
                 # r14: the kernel default is star_salts="auto" — this
                 # point benches the serving posture; a flip on the
                 # non-skewed clique graphs would be a threshold bug
@@ -334,8 +407,9 @@ def main() -> None:
         # #8) — keyed by query, each entry {op, epoch, sec}
         local["fold_timings"] = fold_timings
     # Target selection (see _select_local_target): env-pinned rounds
-    # may refresh their own artifact; inferred rounds never overwrite
-    # but fall back to a suffixed sibling on collision instead of
+    # write their own artifact name after moving an existing file of
+    # that name aside; inferred rounds never overwrite but fall back
+    # to a suffixed sibling on collision instead of
     # silently dropping the per-query map (VERDICT r14 #1).  The
     # decision is made ONCE so the post-10x refresh below can rewrite
     # the same file this run created.
@@ -367,8 +441,8 @@ def main() -> None:
     # One at-scale kernel point at 10× the standard bench graph
     # (verdict r9 #6): turns the "≤6 rounds at any scale" claim into a
     # measured two-point curve on the reference's own metric
-    # (README.md:72) — iterations, per-round shuffle bytes, and skew
-    # percentiles at both sizes ride in the committed artifact.  Runs
+    # (README.md:72) — iterations and per-round pair counts at both
+    # sizes ride in the committed artifact.  Runs
     # AFTER the driver-facing line, the median draws, and the first
     # artifact write, so it can neither void the bench record nor
     # contaminate per-query medians with its GC pressure.
@@ -383,10 +457,11 @@ def main() -> None:
     # warnings (ConnectedComponent.scala:62-63,135-136) target the
     # CONVERGED-HUB case — one giant component concentrating its whole
     # roster on the min key.  One run on a generated 80%-giant graph
-    # records round count, wall, per-round max/p99 rows-per-key, and a
-    # closed-form roster verification, so the straggler behavior is a
-    # measured number, not a cited risk.  SPARK_GRAFT_BENCH_SKEW=0
-    # opts out; runs after every artifact write like the 10x point.
+    # records round count, wall, the converged round's hot-key rows
+    # (unsalted and per salted task), and a closed-form roster
+    # verification, so the straggler behavior is a measured number,
+    # not a cited risk.  SPARK_GRAFT_BENCH_SKEW=0 opts out; runs after
+    # every artifact write like the 10x point.
     if os.environ.get("SPARK_GRAFT_BENCH_SKEW", "1") != "0":
         def cc_kernel_skew_point(n_nodes: int) -> dict:
             try:
@@ -404,9 +479,7 @@ def main() -> None:
                 # explicitly FUSED: this leg is the no-salting baseline
                 # the salted/auto legs are measured against (auto
                 # became the kernel default in r14)
-                res = connected_components(
-                    edges, skew_telemetry=True, star_salts=None
-                )
+                res = connected_components(edges, star_salts=None)
                 a, t = res.assignments.alias("a"), truth.alias("t")
                 mismatches = (
                     a.join(t, SF.col("a.node") == SF.col("t.node"))
@@ -476,7 +549,6 @@ def main() -> None:
                     "iterations": res.iterations,
                     "converged": res.converged,
                     "roster_mismatches": mismatches,
-                    "round_key_skew": res.round_key_skew,
                     "aqe_enabled": spark.conf.get(
                         "spark.sql.adaptive.enabled", None
                     ),

@@ -13,9 +13,6 @@ from connected_component_spark.graph.cc import (
     component_rosters,
     connected_components,
 )
-from connected_component_spark.graph.cc_adjacency import (
-    connected_components_adjacency,
-)
 from connected_component_spark.graph.cliques import (
     cliques_to_edges,
     cliques_to_edges_pairwise,
@@ -73,7 +70,6 @@ from connected_component_spark.sources.zorder import write_zordered, zorder_valu
 __all__ = [
     "CCResult",
     "connected_components",
-    "connected_components_adjacency",
     "component_rosters",
     "cliques_to_edges",
     "cliques_to_edges_pairwise",

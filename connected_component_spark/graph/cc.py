@@ -26,11 +26,11 @@ for 100 TB scale (SURVEY.md §4.3, §7.3):
   count plateau or double-zero (ConnectedComponent.scala:247-249).
   The plateau exists because that metric compares ``(neighbor, min)``
   tuples against reversed ``(self, neighbor)`` tuples and therefore
-  never reaches zero on some stable graphs.  Our default detects the
-  true fixpoint — the edge *set* is unchanged after a full round —
-  with an O(1)-driver-side (count, checksum) comparison: no join, no
-  set-equality shuffle.  ``convergence="reference-counts"`` replicates
-  the literal reference metric + plateau rule for parity testing.
+  never reaches zero on some stable graphs.  We detect the true
+  fixpoint — the edge *set* is unchanged after a full round — with an
+  O(1)-driver-side (count, checksum) comparison: no join, no
+  set-equality shuffle.  The literal reference metric + plateau rule
+  lives on as a parity oracle in tests/cc_twins.py.
 """
 
 from __future__ import annotations
@@ -59,40 +59,17 @@ class CCResult:
     DataFrame where ``component`` is the minimum node id of the
     component (reference output invariant, README.md:28-30).
 
-    ``round_pair_counts`` is per-iteration telemetry: the distinct
-    pair-set size after each full round — the quantity the reference
-    optimizes for at scale (README.md:72 reports iteration counts;
-    shrinking pair counts are the per-round progress signal).  Free
-    in stable-set mode (the convergence scalar already computes it).
-
-    ``round_key_skew`` (opt-in via ``skew_telemetry=True``) is the
-    per-round reducer-key skew of the star shuffles: max / p50 / p99
-    of rows-per-src-key after each round — the quantity that decides
-    whether a straggler reducer appears at 100 TB (a power-law
-    component makes one key's group arbitrarily large while the
-    median stays tiny; the reference tunes against exactly this,
-    README.md:72).  Costs one extra groupBy-count aggregation per
-    round, so it is off by default.
-
-    ``round_shuffle_bytes`` is the shuffle-write volume each round
-    added — per-round deltas of the app-wide per-EXECUTOR
-    ``totalShuffleWrite`` summaries from the JVM status store (read
-    that way because the per-stage list costs O(total stages ever
-    run) to walk) — the cost metric the reference's at-scale tuning
-    actually targets (README.md:72 tunes partitions/memory against
-    shuffle pressure).  ``None`` when the status store is
-    unavailable.  The totals are app-wide, so in a shared session any
-    CONCURRENT job's shuffle writes land in whichever round's delta
-    is open (the kernel loop itself is the only job source in normal
-    single-threaded use).
+    ``round_pair_counts`` is the distinct pair-set size after each
+    full round — the quantity the reference optimizes for at scale
+    (README.md:72 reports iteration counts; shrinking pair counts are
+    the per-round progress signal).  Free: the convergence scalar
+    already computes it.
     """
 
     assignments: DataFrame
     converged: bool
     iterations: int
     round_pair_counts: list[int] | None = None
-    round_shuffle_bytes: list[int] | None = None
-    round_key_skew: list[dict] | None = None
     #: the 1-based round from which large-star ran the SALTED layout
     #: (``star_salts="auto"`` flipped mid-run, or the static opt-in's
     #: round 1); None = the whole run stayed fused
@@ -200,60 +177,6 @@ def small_star(edges: DataFrame) -> DataFrame:
     return _star(oriented, F.col("dst") != F.col("m")).distinct()
 
 
-def _shuffle_write_bytes_total(spark) -> int | None:
-    """Total shuffle-write bytes across the app so far, from the JVM
-    AppStatusStore (the store that backs the UI/REST API — present
-    with the UI disabled too).  ``None`` when the internal signature
-    is unavailable: telemetry must never fail a CC run, so any
-    reflection error degrades to "no telemetry".
-
-    Two care points (review findings): the status store is fed
-    ASYNCHRONOUSLY by the listener bus, so the bus is drained first
-    (bounded wait) to keep per-round delta attribution honest; and
-    the total is read from the per-EXECUTOR summaries — O(#executors)
-    py4j calls — rather than the per-stage list, whose cost grows
-    with every stage the app has ever run (a long bench session has
-    thousands)."""
-    try:
-        jsc = spark.sparkContext._jsc.sc()
-        try:
-            jsc.listenerBus().waitUntilEmpty(10_000)
-        except Exception:
-            pass  # best-effort drain; totals may lag one round
-        ex = jsc.statusStore().executorList(False)
-        return sum(ex.apply(i).totalShuffleWrite() for i in range(ex.size()))
-    except Exception:
-        return None
-
-
-def _key_skew(pairs: DataFrame) -> dict:
-    """max / p50 / p99 of the BIDIRECTIONAL degree per key — the
-    reducer-input profile of the next large-star round, which groups
-    the pair set viewed in both directions (a converged star puts a
-    whole component's size on its hub key, so this is exactly where a
-    100 TB straggler appears).  One union + groupBy-count aggregation;
-    percentiles via percentile_approx (driver holds 3 scalars)."""
-    both = pairs.select("src").unionAll(
-        pairs.select(F.col("dst").alias("src"))
-    )
-    row = (
-        both.groupBy("src")
-        .count()
-        .agg(
-            F.max("count").alias("mx"),
-            F.percentile_approx("count", [0.5, 0.99], 10_000).alias("pct"),
-        )
-        .first()
-    )
-    if row["mx"] is None:  # empty pair set: no keys, no skew
-        return {"max": 0, "p50": 0, "p99": 0}
-    return {
-        "max": int(row["mx"]),
-        "p50": int(row["pct"][0]),
-        "p99": int(row["pct"][1]),
-    }
-
-
 def _set_fingerprint(pairs: DataFrame) -> tuple[int, int]:
     """(row count, order-insensitive checksum) of a distinct pair set.
 
@@ -282,9 +205,9 @@ def _set_fingerprint_with_skew(
     halving) AND the profile of the column where round-output skew
     structurally lives.
 
-    Why dst-only suffices for the FLIP decision (unlike
-    :func:`_key_skew`'s bidirectional reducer profile, which the
-    telemetry record keeps): the probe always runs on a ROUND OUTPUT
+    Why dst-only suffices for the FLIP decision, although the next
+    large-star's reducers group the pair set viewed in BOTH
+    directions: the probe always runs on a ROUND OUTPUT
     — a small-star-shaped (node, component-min) pair set in which
     each node appears as src a bounded number of times (its current
     star targets, ~1), while a converging hub accumulates its whole
@@ -347,75 +270,8 @@ def _set_fingerprint_with_skew(
     return fp, profile
 
 
-def _reference_change_count(new_pairs_grouped: DataFrame, directed_old: DataFrame) -> int:
-    """Literal port of the reference change metric for one star step.
-
-    Reference (ConnectedComponent.scala:91,160): per group ``self``,
-    ``|uniqueNewPairs diff oldNeighbors.map((self, _))|`` — i.e. new
-    ``(n, m)`` tuples not literally equal to some ``(self, neighbor)``
-    tuple of the same group.  ``new_pairs_grouped`` must carry the
-    originating group key as column ``grp``.
-    """
-    matched = (
-        new_pairs_grouped.alias("n")
-        .join(
-            directed_old.alias("o"),
-            (F.col("n.grp") == F.col("o.src"))
-            & (F.col("n.src") == F.col("o.src"))
-            & (F.col("n.dst") == F.col("o.dst")),
-            "left_anti",
-        )
-    )
-    return matched.count()
-
-
-def _large_star_counted(edges: DataFrame) -> tuple[DataFrame, int]:
-    """Large-star + literal reference change count (parity mode)."""
-    und = edges.where(F.col("src") != F.col("dst"))
-    directed = (
-        und.union(und.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .union(edges.where(F.col("src") == F.col("dst")))
-    )
-    mins = (
-        directed.groupBy("src")
-        .agg(F.min("dst").alias("_mn"))
-        .select("src", F.least("src", "_mn").alias("m"))
-    )
-    grouped = (
-        directed.where(F.col("dst") >= F.col("src"))
-        .join(mins, "src")
-        .select(F.col("src").alias("grp"), F.col("dst").alias("src"), F.col("m").alias("dst"))
-        .union(mins.select(F.col("src").alias("grp"), F.col("src"), F.col("m").alias("dst")))
-        .distinct()
-    )
-    change = _reference_change_count(grouped, directed)
-    return grouped.select("src", "dst").distinct(), change
-
-
-def _small_star_counted(edges: DataFrame) -> tuple[DataFrame, int]:
-    """Small-star + literal reference change count (parity mode)."""
-    oriented = edges.select(
-        F.greatest("src", "dst").alias("src"),
-        F.least("src", "dst").alias("dst"),
-    )
-    mins = (
-        oriented.groupBy("src")
-        .agg(F.min("dst").alias("_mn"))
-        .select("src", F.least("src", "_mn").alias("m"))
-    )
-    grouped = (
-        oriented.join(mins, "src")
-        .where(F.col("dst") != F.col("m"))
-        .select(F.col("src").alias("grp"), F.col("dst").alias("src"), F.col("m").alias("dst"))
-        .union(mins.select(F.col("src").alias("grp"), F.col("src"), F.col("m").alias("dst")))
-        .distinct()
-    )
-    change = _reference_change_count(grouped, oriented)
-    return grouped.select("src", "dst").distinct(), change
-
-
 #: round from which the kernel's stats barrier (persist of the round
-#: leaf) engages — see the note at _retire_prev_cache
+#: leaf) engages — see the note at prev_cached in connected_components
 _STATS_BARRIER_FROM = 8
 
 #: adaptive salting (star_salts="auto"): _AUTO_SALTS is the salt count
@@ -467,10 +323,7 @@ _PROBE_COOL_DIV = 64
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 20,
-    convergence: Literal["stable-set", "reference-counts"] = "stable-set",
     checkpoint_dir: str | None = None,
-    skew_telemetry: bool = False,
-    shuffle_telemetry: bool = False,
     star_salts: int | None | Literal["auto"] = "auto",
 ) -> CCResult:
     """Compute connected components of an undirected edge list.
@@ -485,25 +338,16 @@ def connected_components(
     operator); each round runs Large-Star then Small-Star
     (reference alternatingAlgo, ConnectedComponent.scala:230-258),
     checkpoints to truncate lineage, and spends exactly one action on
-    the convergence scalar.
-
-    ``shuffle_telemetry``/``skew_telemetry`` opt into per-round
-    shuffle-write-byte and reducer-skew profiles (``round_shuffle_
-    bytes``/``round_key_skew``).  Both are OFF by default: the
-    shuffle-byte reading drains the listener bus every round for
-    honest delta attribution, a measured ~0.6 s of fixed cost per
-    kernel run at fixture scale (r11 attribution of the
-    dedup_embedding_clusters drift) — bench/diagnostic cost that
-    serving queries must not pay.
+    the convergence scalar.  ``max_iterations`` caps the rounds
+    (``converged=False`` past it); ``checkpoint_dir`` makes the
+    per-round checkpoints reliable instead of local.
 
     ``star_salts`` selects the large-star layout (see
     :func:`large_star`): an int opts into the skew-safe salted layout
     from round 1, for converged-hub topologies where the fused
     single-shuffle layout concentrates a giant component's degree on
     one reducer; ``None`` forces the fused layout for the whole run.
-    Results are identical; applies to the default stable-set
-    convergence (the reference-counts mode is a literal parity twin
-    with its own groupBy + join stars).
+    Results are identical.
 
     ``star_salts="auto"`` — the DEFAULT since r14 (verdict r13 #6) —
     closes the loop the static
@@ -561,18 +405,10 @@ def connected_components(
     # only AFTER the round's action has materialized the new leaf
     prev_cached: DataFrame | None = None
 
-    def _retire_prev_cache(new_cached: DataFrame | None) -> None:
-        nonlocal prev_cached
-        if prev_cached is not None:
-            prev_cached.unpersist()
-        prev_cached = new_cached
-
     pairs = _checkpoint(_canonical_edges(edges).distinct())
     converged = False
     iterations = 0
     round_counts: list[int] = []
-    round_shuffle: list[int] = []
-    round_skew: list[dict] = []
 
     # Right-size the per-round shuffles to the graph (shared policy:
     # plans/tuning.py:shrunk_shuffle — shrink-only, restored on exit;
@@ -583,130 +419,75 @@ def connected_components(
 
     n0 = pairs.count()  # cheap: pairs is checkpointed
     with shrunk_shuffle(spark, n0):
-        if convergence == "reference-counts":
-            # sentinel-free port of the plateau rule
-            # (reference ConnectedComponent.scala:247-249,272)
-            prev_counts: tuple[int, int] | None = None
-            for iterations in range(1, max_iterations + 1):
-                after_large, large_count = _large_star_counted(pairs)
-                after_large = _checkpoint(after_large)
-                after_small, small_count = _small_star_counted(after_large)
-                if iterations >= _STATS_BARRIER_FROM:
-                    pairs = _checkpoint(after_small, eager=False).persist()
-                    # the counts inside the counted stars already ran;
-                    # materialize the new leaf, then retire the old one
-                    pairs.count()
-                    _retire_prev_cache(pairs)
-                else:
-                    pairs = _checkpoint(after_small)
-                counts = (large_count, small_count)
-                if counts == prev_counts or counts == (0, 0):
-                    converged = True
-                    break
-                prev_counts = counts
-        else:
-            auto_salt = star_salts == "auto"
-            active_salts: int | None = None if auto_salt else star_salts
-            salted_from = 1 if active_salts is not None else None
-            prev_fp: tuple[int, int] | None = None
-            prev_count = n0  # the small-set probe bypass's gate
-            probe_cool = False  # cadence: skip this round's probe
-            shuffle_before = (
-                _shuffle_write_bytes_total(spark) if shuffle_telemetry else None
+        auto_salt = star_salts == "auto"
+        active_salts: int | None = None if auto_salt else star_salts
+        salted_from = 1 if active_salts is not None else None
+        prev_fp: tuple[int, int] | None = None
+        prev_count = n0  # the small-set probe bypass's gate
+        probe_cool = False  # cadence: skip this round's probe
+        for iterations in range(1, max_iterations + 1):
+            # lazy checkpoint: the fingerprint aggregation is the
+            # one action per round and materializes blocks (and,
+            # past the barrier threshold, the stats cache) together
+            pairs = _checkpoint(
+                small_star(large_star(pairs, salts=active_salts)),
+                eager=False,
             )
-            for iterations in range(1, max_iterations + 1):
-                # lazy checkpoint: the fingerprint aggregation is the
-                # one action per round and materializes blocks (and,
-                # past the barrier threshold, the stats cache) together
-                pairs = _checkpoint(
-                    small_star(large_star(pairs, salts=active_salts)),
-                    eager=False,
+            barrier = iterations >= _STATS_BARRIER_FROM
+            if barrier:
+                pairs = pairs.persist()
+            # small-set bypass (r14): a flip needs a key with
+            # >= MIN_HOT rows, which needs >= MIN_HOT pairs in the
+            # round — and one star round grows the pair set at
+            # most 3x (output <= input + #nodes <= 3*input), so
+            # prev_count < MIN_HOT/3 PROVES no flip is possible
+            # this round and the probe's per-key aggregation is
+            # skipped outright.  This zeroes the auto-default tax
+            # for every fixture-scale CC call; at hot-key scale
+            # the gate is always open.
+            probe_skew = (
+                auto_salt
+                and active_salts is None
+                and prev_count >= _AUTO_SALT_MIN_HOT // 3
+                # cadence (r15): the last probe read a stone-cold
+                # max — skip exactly one round (see _PROBE_COOL_DIV)
+                and not probe_cool
+            )
+            profile: dict | None = None
+            if probe_skew:
+                # the auto-salt probe rides INSIDE the round's one
+                # action (r14): the dst-side skew profile shares
+                # the fingerprint aggregation, so pre-flip rounds
+                # pay no separate job — what kept auto off the
+                # serving default
+                fp, profile = _set_fingerprint_with_skew(pairs)
+                probe_cool = (
+                    profile["max"]
+                    < _AUTO_SALT_MIN_HOT // _PROBE_COOL_DIV
                 )
-                barrier = iterations >= _STATS_BARRIER_FROM
-                if barrier:
-                    pairs = pairs.persist()
-                # small-set bypass (r14): a flip needs a key with
-                # >= MIN_HOT rows, which needs >= MIN_HOT pairs in the
-                # round — and one star round grows the pair set at
-                # most 3x (output <= input + #nodes <= 3*input), so
-                # prev_count < MIN_HOT/3 PROVES no flip is possible
-                # this round and the probe's per-key aggregation is
-                # skipped outright.  This zeroes the auto-default tax
-                # for every fixture-scale CC call; at hot-key scale
-                # the gate is always open.
-                probe_skew = (
-                    auto_salt
-                    and active_salts is None
-                    and prev_count >= _AUTO_SALT_MIN_HOT // 3
-                    # cadence (r15): the last probe read a stone-cold
-                    # max — skip exactly one round (see _PROBE_COOL_DIV)
-                    and not probe_cool
-                )
-                profile: dict | None = None
-                if probe_skew:
-                    # the auto-salt probe rides INSIDE the round's one
-                    # action (r14): the dst-side skew profile shares
-                    # the fingerprint aggregation, so pre-flip rounds
-                    # pay no separate job — what kept auto off the
-                    # serving default.  Always the probe's profile
-                    # source, so turning telemetry on cannot change
-                    # flip behavior.  (Its per-dst groupBy does ride
-                    # the round's shuffle-byte delta; honest — it IS
-                    # part of the round's action now.)
-                    fp, profile = _set_fingerprint_with_skew(pairs)
-                    probe_cool = (
-                        profile["max"]
-                        < _AUTO_SALT_MIN_HOT // _PROBE_COOL_DIV
-                    )
-                else:
-                    fp = _set_fingerprint(pairs)
-                    probe_cool = False  # never skip twice in a row
-                prev_count = fp[0]
-                if barrier:
-                    _retire_prev_cache(pairs)
-                round_counts.append(fp[0])
-                if shuffle_before is not None:
-                    after = _shuffle_write_bytes_total(spark)
-                    if after is not None:
-                        round_shuffle.append(after - shuffle_before)
-                        shuffle_before = after
-                    else:
-                        shuffle_before = None
-                # skew TELEMETRY keeps its separate job, run AFTER the
-                # shuffle-byte delta is taken, then re-baselines the
-                # counter: its union+groupBy shuffle must appear in
-                # neither this round's delta nor the next one's —
-                # round_shuffle_bytes stays comparable whether
-                # telemetry is on or off (review r7).  Auto-salting
-                # consumes the same profile when telemetry records it.
-                if skew_telemetry:
-                    # recorded profile stays bidirectional (the
-                    # documented reducer-input shape); the flip above
-                    # reads only the fused dst-side probe
-                    round_skew.append(_key_skew(pairs))
-                    if shuffle_before is not None:
-                        # None means "metric unavailable" (keep the old
-                        # baseline); a literal 0 is a valid reading and
-                        # must re-baseline too, else the telemetry job's
-                        # shuffle leaks into the next round's delta.
-                        t = _shuffle_write_bytes_total(spark)
-                        shuffle_before = (
-                            t if t is not None else shuffle_before
-                        )
-                if (
-                    probe_skew
-                    and profile is not None
-                    and profile["max"] >= _AUTO_SALT_MIN_HOT
-                    and profile["max"] * _AUTO_SALT_SHARE >= fp[0]
-                ):
-                    # hot-key skew crossed the threshold: every
-                    # later large-star round runs the salted layout
-                    active_salts = _AUTO_SALTS
-                    salted_from = iterations + 1
-                if fp == prev_fp:
-                    converged = True
-                    break
-                prev_fp = fp
+            else:
+                fp = _set_fingerprint(pairs)
+                probe_cool = False  # never skip twice in a row
+            prev_count = fp[0]
+            if barrier:
+                if prev_cached is not None:
+                    prev_cached.unpersist()
+                prev_cached = pairs
+            round_counts.append(fp[0])
+            if (
+                probe_skew
+                and profile is not None
+                and profile["max"] >= _AUTO_SALT_MIN_HOT
+                and profile["max"] * _AUTO_SALT_SHARE >= fp[0]
+            ):
+                # hot-key skew crossed the threshold: every
+                # later large-star round runs the salted layout
+                active_salts = _AUTO_SALTS
+                salted_from = iterations + 1
+            if fp == prev_fp:
+                converged = True
+                break
+            prev_fp = fp
 
     if prev_cached is not None:
         # drop the final round's cache entry — the checkpoint blocks
@@ -716,23 +497,14 @@ def connected_components(
         pairs.groupBy(F.col("src").alias("node"))
         .agg(F.min("dst").alias("component"))
     )
-    stable = convergence == "stable-set"
-    if not stable:
-        salted_from = None
-    elif salted_from is not None and salted_from > iterations:
+    if salted_from is not None and salted_from > iterations:
         # auto flip decided on the FINAL round: no salted round ran
         salted_from = None
     return CCResult(
         assignments=assignments,
         converged=converged,
         iterations=iterations,
-        round_pair_counts=round_counts if stable else None,
-        round_shuffle_bytes=(
-            round_shuffle
-            if stable and len(round_shuffle) == len(round_counts)
-            else None
-        ),
-        round_key_skew=(round_skew if stable and skew_telemetry else None),
+        round_pair_counts=round_counts,
         salted_from_round=salted_from,
     )
 

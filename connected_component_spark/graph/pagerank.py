@@ -22,7 +22,8 @@ out-degree ≥ 1, so no dangling-mass redistribution term is needed;
 `pagerank` asserts the contract by construction (it symmetrizes).
 
 Static-side co-partitioning — the cluster-scale cost model (r14/r15,
-closing the question `scripts/copart_probe.py` settled mechanically):
+closing the question the co-partitioning probe settled mechanically;
+its results are written up in OPTIMIZATION_r14.md and OPTIMIZATION_r15.md):
 the per-round join of the static `linked` frame against the evolving
 rank can avoid re-shuffling `linked` every round by staging it as
 ``repartition(P, "src").persist()`` — InMemoryRelation preserves the

@@ -658,18 +658,17 @@ _SKEW_ROUNDS = 3
 
 def cc_round_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reducer-skew as a first-class, hash-checked observable
-    (reference README.md:72's tuning concern; the kernel's opt-in
-    ``skew_telemetry`` measures the same profile with
-    percentile_approx): per alternating-star round, the bidirectional
-    rows-per-key distribution of the pair set — (round, n_pairs,
-    n_keys, max_deg, p50_deg, p99_deg).
+    (reference README.md:72's tuning concern): per alternating-star
+    round, the bidirectional rows-per-key distribution of the pair
+    set — (round, n_pairs, n_keys, max_deg, p50_deg, p99_deg).
 
-    Unlike the kernel telemetry (approximate percentiles, engine-
-    internal), this report runs the SAME round operators the kernel
-    loop calls (graph/cc.py:large_star/small_star, the windowed
-    stars; the oracle replays them as groupBy + join, see
-    :func:`_skew_round_sql`) for a FIXED
-    ``_SKEW_ROUNDS`` unroll and picks EXACT discrete percentiles by
+    Unlike the kernel's auto-salt probe (a sampled, dst-side profile
+    with approximate percentiles, engine-internal), this report runs
+    the SAME round operators the kernel loop calls
+    (graph/cc.py:large_star/small_star, the windowed stars; the
+    oracle replays them as groupBy + join, see
+    :func:`_skew_round_sql`) for a FIXED ``_SKEW_ROUNDS`` unroll and
+    picks EXACT discrete percentiles by
     integer rank (rank ceil(q·n) over the degree histogram — integer
     arithmetic only, no float thresholds), so a DuckDB oracle can
     replay every round and every statistic value-for-value.  One

@@ -2299,7 +2299,6 @@ def ann_ivf_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from connected_component_spark.streaming.annindex import IncrementalIVF
-    from connected_component_spark.streaming.store import timed_fold
 
     emb = load_table(spark, sf_dir, "embeddings")
     n = table_row_count(spark, sf_dir, "embeddings")
@@ -2319,7 +2318,7 @@ def ann_ivf_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 cond = F.col("vec_id") >= lo
                 if i < _ANN_INC_BATCHES - 1:
                     cond = cond & (F.col("vec_id") < lo + stride)
-                timed_fold(idx, emb.where(cond), epoch_id=i)
+                idx.update(emb.where(cond), epoch_id=i)
             out = idx.topk(emb.where(F.col("vec_id") % 50 == 0), k=5)
             return out.localCheckpoint(eager=True)
     finally:
@@ -2343,7 +2342,6 @@ def ann_ivf_restart_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from connected_component_spark.streaming.annindex import IncrementalIVF
-    from connected_component_spark.streaming.store import timed_fold
 
     emb = load_table(spark, sf_dir, "embeddings")
     n = table_row_count(spark, sf_dir, "embeddings")
@@ -2365,7 +2363,7 @@ def ann_ivf_restart_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _ivf_kmeans_centroids(spark, sf_dir), state_dir=state_dir
             )
             for i in range(crash_at):
-                timed_fold(idx, batch(i), epoch_id=i)
+                idx.update(batch(i), epoch_id=i)
             del idx  # the "crash": only the disk state survives
             resumed = IncrementalIVF.load(spark, state_dir)
             # explicit raise, not assert — the resumed-at-crash-point
@@ -2377,7 +2375,7 @@ def ann_ivf_restart_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f"{resumed.batches_seen}, expected {crash_at}"
                 )
             for i in range(crash_at, _ANN_INC_BATCHES):
-                timed_fold(resumed, batch(i), epoch_id=i)
+                resumed.update(batch(i), epoch_id=i)
             out = resumed.topk(emb.where(F.col("vec_id") % 50 == 0), k=5)
             return out.localCheckpoint(eager=True)
     finally:
@@ -3289,7 +3287,6 @@ def text_bm25_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from connected_component_spark.plans.tuning import shrunk_shuffle
     from connected_component_spark.streaming.bm25 import IncrementalBM25
-    from connected_component_spark.streaming.store import timed_fold
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     n = table_row_count(spark, sf_dir, "documents")
@@ -3306,7 +3303,7 @@ def text_bm25_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 cond = F.col("doc_id") >= lo
                 if i < _BM25_INC_BATCHES - 1:
                     cond = cond & (F.col("doc_id") < lo + stride)
-                timed_fold(idx, docs.where(cond), epoch_id=i)
+                idx.update(docs.where(cond), epoch_id=i)
             out = idx.topk(q, k1=_BM25_K1, b=_BM25_B, k=_BM25_TOPK)
             return out.localCheckpoint(eager=True)
     finally:
@@ -3334,7 +3331,6 @@ def text_bm25_maxscore_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from connected_component_spark.plans.tuning import shrunk_shuffle
     from connected_component_spark.streaming.bm25 import IncrementalBM25
-    from connected_component_spark.streaming.store import timed_fold
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     n = table_row_count(spark, sf_dir, "documents")
@@ -3351,7 +3347,7 @@ def text_bm25_maxscore_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 cond = F.col("doc_id") >= lo
                 if i < _BM25_INC_BATCHES - 1:
                     cond = cond & (F.col("doc_id") < lo + stride)
-                timed_fold(idx, docs.where(cond), epoch_id=i)
+                idx.update(docs.where(cond), epoch_id=i)
             out = idx.topk_pruned(
                 q, k1=_BM25_K1, b=_BM25_B, k=_BM25_TOPK
             ).localCheckpoint(eager=True)
@@ -3386,7 +3382,6 @@ def text_bm25_restart_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from connected_component_spark.plans.tuning import shrunk_shuffle
     from connected_component_spark.streaming.bm25 import IncrementalBM25
-    from connected_component_spark.streaming.store import timed_fold
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     n = table_row_count(spark, sf_dir, "documents")
@@ -3408,7 +3403,7 @@ def text_bm25_restart_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         with shrunk_shuffle(spark, n):
             idx = IncrementalBM25(state_dir=state_dir)
             for i in range(crash_at):
-                timed_fold(idx, batch(i), epoch_id=i)
+                idx.update(batch(i), epoch_id=i)
             del idx  # the "crash": only the disk state survives
             resumed = IncrementalBM25.load(spark, state_dir)
             if resumed.batches_seen != crash_at:
@@ -3417,7 +3412,7 @@ def text_bm25_restart_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f"{resumed.batches_seen}, expected {crash_at}"
                 )
             for i in range(crash_at, _BM25_INC_BATCHES):
-                timed_fold(resumed, batch(i), epoch_id=i)
+                resumed.update(batch(i), epoch_id=i)
             out = resumed.topk(q, k1=_BM25_K1, b=_BM25_B, k=_BM25_TOPK)
             return out.localCheckpoint(eager=True)
     finally:

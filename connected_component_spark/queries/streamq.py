@@ -964,7 +964,6 @@ def stream_winnow_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
         _WINNOW_W,
     )
     from connected_component_spark.sources.tables import table_row_count
-    from connected_component_spark.streaming.store import timed_fold
     from connected_component_spark.streaming.winnow import IncrementalWinnow
 
     n = table_row_count(spark, sf_dir, "documents")
@@ -988,8 +987,7 @@ def stream_winnow_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
                 state_dir=state_dir,
             )
             for i, path in enumerate(slices[:crash_at]):
-                timed_fold(
-                    state,
+                state.update(
                     spark.read.parquet(path).select("doc_id", "text"),
                     epoch_id=i,
                 )
@@ -1003,8 +1001,7 @@ def stream_winnow_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f"{resumed.batches_seen}, expected {crash_at}"
                 )
             for i, path in enumerate(slices[crash_at:], start=crash_at):
-                timed_fold(
-                    resumed,
+                resumed.update(
                     spark.read.parquet(path).select("doc_id", "text"),
                     epoch_id=i,
                 )

@@ -38,7 +38,6 @@ import json
 import os
 import shutil
 import tempfile
-import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -49,37 +48,7 @@ __all__ = [
     "LazyBindings",
     "CONSOLIDATE_EVERY",
     "run_state_stream",
-    "timed_fold",
-    "FOLD_TELEMETRY",
 ]
-
-#: per-fold wall-time telemetry (verdict r11 #8): None = disabled (the
-#: serving default — zero overhead); bench assigns a list and every
-#: fold routed through :func:`timed_fold` appends
-#: {"op", "epoch", "sec"}, so durability-cost regressions are
-#: attributable per trigger instead of hunted by hand (the r11
-#: 15.7 s -> 10.6 s stream_incremental_dedup chase).
-FOLD_TELEMETRY: list[dict] | None = None
-
-
-def timed_fold(state, batch: DataFrame, epoch_id=None, epoch_lineage=None):
-    """``state.update`` with optional per-fold wall-time telemetry —
-    the single fold entry point shared by the stream runner and the
-    direct-fold query rows, so the telemetry covers both paths."""
-    import connected_component_spark.streaming.store as _self
-
-    if _self.FOLD_TELEMETRY is None:
-        state.update(batch, epoch_id=epoch_id, epoch_lineage=epoch_lineage)
-        return
-    t0 = time.perf_counter()
-    state.update(batch, epoch_id=epoch_id, epoch_lineage=epoch_lineage)
-    _self.FOLD_TELEMETRY.append(
-        {
-            "op": type(state).__name__,
-            "epoch": epoch_id,
-            "sec": round(time.perf_counter() - t0, 3),
-        }
-    )
 
 _MANIFEST = "_manifest.json"
 
@@ -647,7 +616,7 @@ def run_state_stream(
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         b = prepare(batch_df) if prepare is not None else batch_df
-        timed_fold(state, b, epoch_id=batch_id, epoch_lineage=checkpoint_dir)
+        state.update(b, epoch_id=batch_id, epoch_lineage=checkpoint_dir)
 
     writer = stream.writeStream.foreachBatch(_fold).trigger(
         availableNow=True

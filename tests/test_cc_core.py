@@ -20,6 +20,7 @@ from connected_component_spark.graph.cliques import (
     cliques_to_edges_pairwise,
     format_rosters_text,
 )
+from tests.cc_twins import connected_components_reference_counts
 
 README_CLIQUES = [[1, 2, 3], [3, 4], [1, 5], [2], [6], [7, 8], [6, 8], [9]]
 README_EXPECTED = {1: [1, 2, 3, 4, 5], 6: [6, 7, 8], 9: [9]}
@@ -38,10 +39,17 @@ def _rosters(result):
 
 
 @pytest.mark.parametrize("expand", [cliques_to_edges, cliques_to_edges_pairwise])
-@pytest.mark.parametrize("convergence", ["stable-set", "reference-counts"])
+@pytest.mark.parametrize(
+    "convergence",
+    [
+        pytest.param(connected_components, id="stable-set"),
+        pytest.param(connected_components_reference_counts, id="reference-counts"),
+    ],
+)
 def test_readme_example(spark, expand, convergence):
+    """The kernel and the reference-counts twin (tests/cc_twins.py)."""
     edges = expand(_cliques_df(spark, README_CLIQUES))
-    result = connected_components(edges, convergence=convergence)
+    result = convergence(edges)
     assert result.converged
     assert _rosters(result) == README_EXPECTED
     # reference observed <= 5-6 iterations at 100B nodes (README.md:56,72)

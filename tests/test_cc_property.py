@@ -1,8 +1,8 @@
 """Property-based + differential tests for the CC kernel (SURVEY §5.2
 items 3-4): random edge lists vs an independent union-find oracle
 (replacing the reference's GraphX differential,
-CCGraphXDriver.scala:31-33), plus cross-mode agreement between the
-two convergence detectors."""
+CCGraphXDriver.scala:31-33), plus agreement with the reference-counts
+and adjacency twins of tests/cc_twins.py."""
 
 from __future__ import annotations
 
@@ -10,6 +10,12 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from connected_component_spark.graph.cc import connected_components
+from tests.cc_twins import (
+    connected_components_adjacency,
+    connected_components_reference_counts,
+    large_star_counted,
+    small_star_counted,
+)
 
 
 def union_find(edges: list[tuple[int, int]]) -> dict[int, int]:
@@ -63,8 +69,8 @@ def test_cc_matches_union_find(spark, edges):
 @given(edges=edge_lists)
 def test_convergence_modes_agree(spark, edges):
     df = spark.createDataFrame(edges, "src long, dst long")
-    a = connected_components(df, convergence="stable-set")
-    b = connected_components(df, convergence="reference-counts")
+    a = connected_components(df)
+    b = connected_components_reference_counts(df)
     assert a.converged and b.converged
     assert {(r.node, r.component) for r in a.assignments.collect()} == {
         (r.node, r.component) for r in b.assignments.collect()
@@ -85,8 +91,6 @@ def test_windowed_rounds_match_join_formulation(spark, edges, loops):
     final rosters alone would hide a change in the round count."""
     from connected_component_spark.graph.cc import (
         _canonical_edges,
-        _large_star_counted,
-        _small_star_counted,
         large_star,
         small_star,
     )
@@ -95,7 +99,7 @@ def test_windowed_rounds_match_join_formulation(spark, edges, loops):
     rows += [(v, v) for v in loops]
     pairs = _canonical_edges(spark.createDataFrame(rows, "src long, dst long"))
     for _ in range(3):
-        want = _small_star_counted(_large_star_counted(pairs)[0])[0]
+        want = small_star_counted(large_star_counted(pairs)[0])[0]
         want = want.localCheckpoint()
         expected = set(map(tuple, want.collect()))
         for salts in (None, 3):
@@ -135,14 +139,10 @@ def test_generator_chains_vs_union_find(spark):
 @given(edges=edge_lists)
 def test_adjacency_implementation_matches_union_find(spark, edges):
     """The second distributed CC implementation (collect_set stars,
-    graph/cc_adjacency.py) against the union-find oracle on random
-    edge lists — the same property the join-based kernel satisfies,
-    so the two implementations are pinned to each other through an
-    independent third."""
-    from connected_component_spark.graph.cc_adjacency import (
-        connected_components_adjacency,
-    )
-
+    tests/cc_twins.py) against the union-find oracle on random edge
+    lists — the same property the windowed kernel satisfies in
+    test_cc_matches_union_find, so the two implementations are pinned
+    to each other through an independent third."""
     df = spark.createDataFrame(edges, "src long, dst long")
     result = connected_components_adjacency(df)
     assert result.converged

@@ -114,17 +114,15 @@ def test_distributed_generator_1m_cliques(spark):
 def test_two_cc_implementations_agree_at_1m_nodes(spark):
     """r3 verdict task 4 — the at-scale differential the reference
     gets from GraphX (CCGraphXDriver.scala:31-33,84-86): two
-    structurally disjoint distributed CC implementations (join-based
+    structurally disjoint distributed CC implementations (windowed
     stars vs collect_set adjacency stars) over the same generated
     ~1M-node graph must produce IDENTICAL full assignment tables.
 
     PySpark has no GraphX binding, so the adjacency formulation —
     the literal DataFrame port of the reference's
     aggregateByKey(HashSet) grouping — plays the independent-
-    implementation role."""
-    from connected_component_spark.graph.cc_adjacency import (
-        connected_components_adjacency,
-    )
+    implementation role (tests/cc_twins.py)."""
+    from tests.cc_twins import connected_components_adjacency
 
     cliques, _truth = distributed_clique_chains(
         spark, 100_000, max_nodes_per_component=200
@@ -151,33 +149,6 @@ def test_two_cc_implementations_agree_at_1m_nodes(spark):
         .count()
     )
     assert diff == 0
-
-
-def test_cc_round_shuffle_telemetry(spark):
-    """r3 verdict task 8 — the kernel reports per-round shuffle-write
-    bytes (the cost the reference's at-scale tuning targets,
-    README.md:72), one entry per round, non-negative and non-zero for
-    real rounds on a non-trivial graph."""
-    from connected_component_spark.graph.cc import _shuffle_write_bytes_total
-
-    if _shuffle_write_bytes_total(spark) is None:
-        # the telemetry reads private[spark] JVM internals that shift
-        # across Spark minors; the library degrades gracefully to
-        # None, and a Spark bump must not turn that loss into a red
-        # CI signal (ADVICE r4)
-        import pytest
-
-        pytest.skip("AppStatusStore reflection path unavailable on this Spark")
-    cliques, _ = distributed_clique_chains(spark, 1_000)
-    res = connected_components(cliques_to_edges(cliques), shuffle_telemetry=True)
-    assert res.converged
-    tel = res.round_shuffle_bytes
-    assert tel is not None and len(tel) == res.iterations
-    assert all(b >= 0 for b in tel)
-    assert sum(tel) > 0  # star rounds genuinely shuffle
-    # opt-in (r11): a plain serving run pays no listener-bus drain and
-    # reports no shuffle profile
-    assert connected_components(cliques_to_edges(cliques)).round_shuffle_bytes is None
 
 
 def test_cc_handles_megahub_star_graph(spark):
@@ -280,32 +251,11 @@ def test_graphframes_differential_if_available(spark, tmp_path):
     assert j.count() == ours.count()
 
 
-def test_cc_skew_telemetry_profiles_rounds(spark):
-    """Opt-in reducer-skew telemetry: one (max, p50, p99) profile per
-    round, max >= p99 >= p50 >= 1, and a star graph (one hub key)
-    shows max far above the median — the straggler signal the
-    telemetry exists to surface.  Off by default (None)."""
-    from connected_component_spark.graph.cc import connected_components
-
-    hub = spark.range(1, 400).selectExpr("0 as src", "id as dst")
-    res = connected_components(hub, skew_telemetry=True)
-    assert res.converged
-    skew = res.round_key_skew
-    assert skew is not None and len(skew) == res.iterations
-    for prof in skew:
-        assert prof["max"] >= prof["p99"] >= prof["p50"] >= 1
-    # round 1 reflects the hub: one key holds ~all pairs
-    assert skew[0]["max"] >= 50 * skew[0]["p50"]
-
-    res_off = connected_components(hub)
-    assert res_off.round_key_skew is None
-
-
 def test_skewed_hub_graph_closed_form_truth_and_skew(spark):
     """skewed_hub_graph (verdict r10 #4): the converged-hub stress
     topology — 80% of nodes in ONE component — resolves to exactly
-    the closed-form truth, and the skew telemetry shows the signature
-    the reference's at-scale comments warn about: the giant
+    the closed-form truth, and the converged pair set shows the
+    signature the reference's at-scale comments warn about: the giant
     component's min key accumulates the whole component (max rows/key
     ~ giant size) while the typical reducer stays tiny (p99 bounded),
     so stragglers — not volume — are the scaling risk."""
@@ -313,7 +263,7 @@ def test_skewed_hub_graph_closed_form_truth_and_skew(spark):
 
     n = 100_000
     edges, truth = skewed_hub_graph(spark, n)
-    res = connected_components(edges, skew_telemetry=True)
+    res = connected_components(edges)
     assert res.converged
     a, t = res.assignments.alias("a"), truth.alias("t")
     joined = a.join(t, F.col("a.node") == F.col("t.node"))
@@ -321,10 +271,23 @@ def test_skewed_hub_graph_closed_form_truth_and_skew(spark):
     assert (
         joined.where(F.col("a.component") != F.col("t.component")).count() == 0
     )
-    # hub signature in the telemetry: by the final round the giant
-    # component's min key holds ~the whole component while p99 stays
-    # orders of magnitude below it
-    last = res.round_key_skew[-1]
+    # hub signature: viewed as (node, component) pairs, the converged
+    # assignment is the next large-star's input, whose reducers group
+    # each key's BIDIRECTIONAL degree — the giant component's min key
+    # holds ~the whole component while p99 stays orders of magnitude
+    # below it
+    keys = res.assignments.select(F.col("node").alias("k")).unionAll(
+        res.assignments.select(F.col("component").alias("k"))
+    )
+    last = (
+        keys.groupBy("k")
+        .count()
+        .agg(
+            F.max("count").alias("max"),
+            F.percentile_approx("count", 0.99, 10_000).alias("p99"),
+        )
+        .first()
+    )
     assert last["max"] >= int(0.8 * n * 0.9)
     assert last["p99"] <= 100
     # param guards

@@ -148,33 +148,3 @@ def test_write_many_surfaces_every_error(tmp_path, spark):
     assert any("boom" in str(e) for e in errs)
     # nothing above became visible: the fold never committed
     assert st.manifest() is None
-
-
-def test_timed_fold_records_only_when_enabled(tmp_path, spark):
-    """r12 fold telemetry: with FOLD_TELEMETRY unset, timed_fold is a
-    plain passthrough; with a list assigned, each fold appends
-    {op, epoch, sec} — the bench draw-1 attribution contract."""
-    import connected_component_spark.streaming.store as store_mod
-
-    class FakeState:
-        def __init__(self):
-            self.calls = []
-
-        def update(self, batch, epoch_id=None, epoch_lineage=None):
-            self.calls.append((epoch_id, epoch_lineage))
-
-    st = FakeState()
-    df = spark.range(1)
-    assert store_mod.FOLD_TELEMETRY is None
-    store_mod.timed_fold(st, df, epoch_id=0, epoch_lineage="ck")
-    assert st.calls == [(0, "ck")]
-    store_mod.FOLD_TELEMETRY = []
-    try:
-        store_mod.timed_fold(st, df, epoch_id=1)
-        assert len(store_mod.FOLD_TELEMETRY) == 1
-        rec = store_mod.FOLD_TELEMETRY[0]
-        assert rec["op"] == "FakeState" and rec["epoch"] == 1
-        assert isinstance(rec["sec"], float) and rec["sec"] >= 0
-    finally:
-        store_mod.FOLD_TELEMETRY = None
-    assert st.calls == [(0, "ck"), (1, None)]
